@@ -167,6 +167,18 @@ object Tables {
         // behind an RDD scan (the minhashDocsPlan convention at the one
         // chokepoint every query shares); bench/verify/production
         // sessions never set it.
+        // Cluster-deployment caveat (not a fixture-scale concern; it holds
+        // for every localCheckpoint site — here, the tfidf/lm_score term
+        // streams, the sim_recall working set, the CC rounds and the
+        // counter_rate stats): localCheckpoint is EXECUTOR-LOCAL storage
+        // with the lineage truncated. An executor lost between the
+        // sampling pass and the sort fails the query instead of
+        // recomputing, and the blocks are freed only when the driver GCs
+        // the RDD (ContextCleaner), not when the result materializes. A
+        // 100 TB deployment needs reliable checkpointing here
+        // (spark.checkpoint.dir + Dataset.checkpoint) or
+        // persist(MEMORY_AND_DISK_2): one blocking write traded for
+        // recoverability, with the same plan shape.
         import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Window => LWindow}
         val heavy = df.queryExecution.analyzed.collectFirst {
           case _: Aggregate => (); case _: LWindow => (); case _: Generate => ()

@@ -341,15 +341,9 @@ object RecallOps {
     val km = ClusterOps.trainedModel(s, dir)
     val pq = PqOps.trainedPq(s, dir)
     // the shared working set: one corpus scan + one derivation pass,
-    // checkpointed; every arm below reads these blocks.
-    // Cluster-deployment note (disclosed, not a fixture-scale concern):
-    // localCheckpoint is EXECUTOR-LOCAL storage with the lineage
-    // truncated — an executor loss mid-audit fails the query instead of
-    // recomputing, and the blocks are freed only when the driver GCs the
-    // RDD (ContextCleaner), not at result materialization. At 100 TB run
-    // the audit with reliable checkpointing (spark.checkpoint.dir +
-    // Dataset.checkpoint) or persist(MEMORY_AND_DISK_2), trading one
-    // blocking write for recoverability; the plan shape is identical.
+    // checkpointed; every arm below reads these blocks. The cluster
+    // caveat of localCheckpoint (executor loss fails the audit) is
+    // documented at Tables.resultOrder, the chokepoint every query shares.
     val base = withClusterCol(
       SimilarityOps.nanFreeEmbeddings(s, dir)
         .withColumn("bucket", SimilarityOps.signBucket(col("embedding"))), km)

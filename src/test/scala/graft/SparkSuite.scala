@@ -57,6 +57,7 @@ object SparkSuite {
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.LocalFsConf) // the local filesystem production ships
       .getOrCreate()
     GraftExtensions.register(s) // native functions visible to SQL in specs
     s

@@ -5,6 +5,8 @@
 # windows on identical code). Usage:
 #   paired_bench.sh <beforeClasses> <afterClasses> <keys> <reps> <rounds> <sfDir> <outPrefix>
 # Emits <outPrefix>_{before,after}_<round>.json (the full bench metric line).
+# Exits non-zero at the first round whose java run fails or does not leave
+# exactly one bench_*.json, so a partial round set is never paired.
 set -uo pipefail
 BEFORE="$1"; AFTER="$2"; KEYS="$3"; REPS="${4:-4}"; ROUNDS="${5:-2}"
 SF="${6:-/root/testdata/sf0.1}"; OUT="${7:-/tmp/paired}"
@@ -23,7 +25,13 @@ run() { # <classes> <tag> <round>
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
     -cp "$1:/opt/spark/jars/*" graft.Bench > /dev/null 2>&1
   local rc=$?
-  cp "$d"/bench_*.json "${OUT}_$2_$3.json" 2>/dev/null
+  local outs=("$d"/bench_*.json)
+  if [ "$rc" -ne 0 ] || [ "${#outs[@]}" -ne 1 ] || [ ! -f "${outs[0]}" ]; then
+    echo "[paired] $2 round $3 FAILED: java rc=$rc, bench json: ${outs[*]}" >&2
+    rm -rf "$d"
+    exit 1
+  fi
+  cp "${outs[0]}" "${OUT}_$2_$3.json" || { rm -rf "$d"; exit 1; }
   rm -rf "$d"
   echo "[paired] $2 round $3 rc=$rc -> ${OUT}_$2_$3.json"
 }
