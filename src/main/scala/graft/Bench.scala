@@ -1,71 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // the bench contract is local[32]; default to the machine's cores
-    // (capped at 32) rather than a hardcoded 4 — an env-less invocation
-    // must not silently bench on an eighth of the cores
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // 8 shuffle partitions, not one per core: a fixture-scale shuffle
-      // carries a few MB, so the per-task scheduling floor dominates a
-      // 32-way exchange (measured: dedup family 5.6 s -> 3.8 s at width 8
-      // with identical plans). Pre-shuffle compute still fans out across
-      // all cores (scan splits / Tables.fanOut); this is only the
-      // post-exchange width. Production sessions (GraftSession) get the
-      // same effect dynamically from AQE partition coalescing — this
-      // constant is the static stand-in for the AQE-off bench session.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", math.min(cpus.toInt, 8).toString))
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill on tmpfs: the backing virtual disk has multi-second
-      // latency bursts under host contention that stall shuffle-heavy
-      // queries with the CPU idle (measured: <3% steal, 90% idle, 10-50x
-      // wall-clock swings); shuffle volume at bench scale is a few MB
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      // keep every query's compiled codegen stages resident across the whole
-      // run (default cache is 100 entries; 51 queries × several stages each
-      // would evict the warmup's work before the timed pass reuses it)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // AQE off for the bench session: adaptive execution materializes
-      // every shuffle stage as its own job to re-plan from runtime stats —
-      // worth it when there is skew to split or partitions to coalesce,
-      // pure scheduling overhead at fixture scale (measured: 39.5s -> 25.4s
-      // across the 51-query suite, with zero plan improvements to show for
-      // it — there is nothing to adapt in a few-MB shuffle). Production
-      // sessions (GraftSession) keep AQE on: at 100 TB the re-planning
-      // amortizes and the skew-join splitting is load-bearing.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      // reuse one analyzed DataFrame per fixture table across the suite
-      // (see Tables.load — safe here: this main owns its only session)
-      .config("spark.graft.fixtureCache", "true")
-      // fanOut's round-robin rebalance defensively sorts its input so a
-      // retried task repartitions identically; in this single-attempt
-      // local bench (and with every query's output order fixed by
-      // resultOrder/aggregation anyway) that is a pure extra sort of the
-      // corpus per fanned-out query. Production sessions keep the default.
-      .config("spark.sql.execution.sortBeforeRepartition", "false")
-      // optimizer-time floor trims for the 68-query suite (measured ~10%
-      // of the per-query floor, largest on many-branch projections like
-      // q_type_dispatch): constraint propagation is O(n²) in expression
-      // count and infers nothing the hand-written plans don't already
-      // state; DPP scans every join for partition-pruning opportunities
-      // none of the unpartitioned fixture scans can use. Production
-      // sessions keep both ON — at 100 TB inferred IsNotNull pushdown and
-      // partition pruning are load-bearing; here they are pure plan-time
-      // cost on already-explicit plans.
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.optimizer.dynamicPartitionPruning.enabled", "false")
-      .getOrCreate()
-    // experiment passthrough for local lever probes ("k=v;k=v") — driver
-    // runs set nothing here, so recorded BENCH numbers use the session
-    // conf above plus whatever is committed as an explicit .config line
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
+    val spark = GraftSession.fixture()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: absorb one-time JVM/codegen init and parquet footer
     // reads so per-query timings measure the queries, not session startup
@@ -131,16 +68,10 @@ object Bench {
     // materialize the MV for the benched fixture OUTSIDE the timed window:
     // in a deployment the refresh job maintains it continuously
     // (init.sql:51-54 — every 30 s), so a dashboard read never pays the
-    // refresh; q_mv_read's timed number is the read path (pruned scan).
-    // minuteMvDf, not minuteMvDir: the first spark.read.parquet over the
-    // day-partitioned MV pays partition DISCOVERY (~9k day dirs at sf30,
-    // ~31k at sf100 — ScaleFixtures day-shifts each copy, so the day count
-    // scales with the factor; measured 19.9/26.5 s of driver-side listing
-    // in the r14 reps=1 sweeps). A deployment reads through a catalog
-    // table whose metastore prunes partitions without listing; warming the
-    // memoized DataFrame here is the local stand-in for that.
+    // refresh; q_mv_read's timed number is the read path (partition
+    // discovery plus the pruned scan).
     if (selected.contains("q_mv_read"))
-      try pipeline.MaterializedViews.minuteMvDf(spark, sfDir)
+      try pipeline.MaterializedViews.minuteMvDir(spark, sfDir)
       catch { case _: Throwable => () }
     // same refresh-cadence contract for the artifact-SERVED keys: a
     // deployment's scheduled jobs maintain the versioned models / prune

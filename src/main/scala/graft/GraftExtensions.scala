@@ -4,14 +4,7 @@ import graft.functions.{CosineSimilarity, MediaStats, MinHashSig, NearestCentroi
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** SparkSessionExtensions injector for the engine's native functions.
-  *
-  * Usage:
-  * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)   // or
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
-  *
+  * [[GraftSession.builder]] installs it through `spark.sql.extensions`.
   * For a session that already exists (test fixtures, spark-shell),
   * [[GraftExtensions.register]] installs the same functions directly.
   */

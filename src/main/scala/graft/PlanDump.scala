@@ -2,42 +2,27 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement tool: dumps `explain("formatted")` for
   * every registered query (or a comma-separated subset) under the SAME
   * session configuration the bench uses, one file per query, so plan
   * claims in OPTIMIZATION_r*.md are checkable against committed text.
   *
-  * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [keys]
+  * With `--exec` it runs each query first and dumps the final
+  * `executedPlan` instead: runtime-only effects (AQE exchange and stage
+  * reuse, skew splits under `SPARK_GRAFT_CONF=spark.sql.adaptive.enabled=true`)
+  * are invisible in the static explain.
+  *
+  * Usage: runMain graft.PlanDump [--exec] <sfDir> <outDir> <suffix> [keys]
   *   e.g. runMain graft.PlanDump /root/testdata/sf0.1 plans/r17 before
   */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    val (execFlag, args) = argv.partition(_ == "--exec")
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "plans/r17"
     val suffix = if (args.length > 2) args(2) else "before"
     val only = if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", math.min(cpus.toInt, 8).toString))
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.graft.fixtureCache", "true")
-      .config("spark.sql.execution.sortBeforeRepartition", "false")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.optimizer.dynamicPartitionPruning.enabled", "false")
-      .getOrCreate()
-    // experiment passthrough ("k=v;k=v"), same contract as Bench/Verify —
-    // lets a dump show the producing plan the resultOrder checkpoint
-    // hides (spark.graft.resultOrderCheckpoint=false), or any gate arm
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
+    val spark = GraftSession.fixture()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val selected = only.fold(SparkEntry.queries)(ks => SparkEntry.queries.filter(kv => ks(kv._1)))
@@ -48,8 +33,12 @@ object PlanDump {
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val plan =
+          if (execFlag.nonEmpty) {
+            df.collect()
+            df.queryExecution.executedPlan.toString
+          } else df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
         Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
           plan.getBytes("UTF-8"))
         println(s"[plandump] $name ok")

@@ -2,19 +2,18 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: dumps `explain(formatted)` for the headline queries
   * plus the properties each plan must keep at scale. Regenerate PLANS.md
   * with `sbt "runMain graft.Plans"` after touching an operator.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
+    // the production session: the claims below are about 100 TB. The
+    // result-order checkpoint is off so each dump shows the producing plan,
+    // not the RDD scan the checkpoint leaves in front of the final sort.
+    val spark = GraftSession.builder("local[4]")
       .config("spark.ui.enabled", "false")
+      .config("spark.graft.resultOrderCheckpoint", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
@@ -87,7 +86,11 @@ object Plans {
 
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit of headline queries\n\n")
-    sb.append("Generated by `graft.Plans` at sf0.001 (plan shape is scale-independent).\n")
+    sb.append("Generated by `graft.Plans` at sf0.001 (plan shape is scale-independent)\n")
+    sb.append("on the production session (`GraftSession.builder`): AQE is on, so each\n")
+    sb.append("plan is the initial adaptive plan that runtime re-planning starts from.\n")
+    sb.append("The result-order checkpoint is off, so each plan shows the operators that\n")
+    sb.append("produce the result rather than a checkpoint scan.\n")
     sb.append("Each section states the property the plan must keep at 100 TB, then the\n")
     sb.append("`explain(formatted)` output demonstrating it.\n")
     audited.foreach { case (key, claim) =>

@@ -23,33 +23,6 @@ object Tables {
   private val schemaCache =
     scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
 
-  // Whole-DataFrame memoization, OPT-IN via spark.graft.fixtureCache: a
-  // DataFrame strongly references its session (the WeakHashMap-defeating
-  // self-reference documented above), so an always-on cache would leak
-  // every stopped session for the JVM's lifetime. Bench and Verify enable
-  // it: they own exactly one session, their JVM exits with it, and across
-  // a 68-query suite the per-call file-listing + relation re-analysis is
-  // pure floor. Library/production sessions leave it off and pay one
-  // cheap re-read per call. Keyed on the session OBJECT + path so two
-  // sessions never share plans — an identityHashCode key could collide
-  // between a stopped and a live session and hand out a DataFrame pinned
-  // to the dead one; the strong session reference adds no leak the cached
-  // DataFrame's own QueryExecution->session reference doesn't already
-  // carry.
-  private val dfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** The opt-in memoization in one place — fixture tables (load) and the
-    * materialized MV (MaterializedViews.minuteMvDf) share the flag, the
-    * (session, path) keying, and the leak reasoning above; two parallel
-    * caches drifted once already.
-    */
-  private[graft] def memoizedDf(spark: SparkSession, path: String)(
-      read: => DataFrame): DataFrame =
-    if (spark.conf.getOption("spark.graft.fixtureCache").contains("true"))
-      dfCache.getOrElseUpdate((spark, path), read)
-    else read
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // The driver's fixtures carry TIMESTAMP(NANOS) columns, which Spark 4
     // rejects outright; read them as long nanos and convert below. Set once
@@ -57,10 +30,8 @@ object Tables {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     if (!spark.conf.getOption(key).contains("true")) spark.conf.set(key, "true")
     val path = s"$dir/$name.parquet"
-    memoizedDf(spark, path) {
-      val schema = schemaCache.getOrElseUpdate(path, spark.read.parquet(path).schema)
-      spark.read.schema(schema).parquet(path)
-    }
+    val schema = schemaCache.getOrElseUpdate(path, spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 
   /** The time-series fact table. Stand-in for the reference's `opcua_data`

@@ -1,35 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // default to real cores (capped): correctness is width-blind but an
-    // env-less driver invocation shouldn't run 59 queries on 4 threads
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 16).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // 8-wide shuffles for the same reason as Bench: fixture-scale
-      // exchanges are scheduling-bound, and correctness is width-blind
-      .config("spark.sql.shuffle.partitions",
-        math.min(cpus.toInt, 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // tmpfs shuffle dir — see Bench.scala: the backing virtual disk
-      // stalls shuffles for seconds under host contention
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      // reuse one analyzed DataFrame per fixture table across the suite
-      // (see Tables.load — safe here: this main owns its only session)
-      .config("spark.graft.fixtureCache", "true")
-      .getOrCreate()
-    // experiment passthrough ("k=v;k=v"), same contract as Bench's — lets
-    // a gate arm (e.g. spark.graft.singlePhaseMaxBytes=0) be oracle-checked
-    // directly; driver runs set nothing here
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
+    // the session Bench measures, so the oracle checks the benched config
+    val spark = GraftSession.fixture()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for local iteration (same contract as

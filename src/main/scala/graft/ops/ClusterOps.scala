@@ -102,21 +102,8 @@ object ClusterOps {
     SimilarityOps.nanFreeEmbeddings(s, dir)
       .select(col("vec_id"), expr(QuantizeExpr).as("q"))
 
-  // Trained-model memo, OPT-IN via spark.graft.fixtureCache — the same
-  // flag, keying, and leak reasoning as Tables.memoizedDf: Bench/Verify
-  // own one session and run both q_kmeans and the trained-IVF query, which
-  // share this training; a library session leaves the flag off and
-  // retrains per call (the correct default for mutable inputs). The model
-  // itself is k·d longs — no session reference.
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), KmeansModel]
-
-  private[graft] def trainedModel(s: SparkSession, dir: String): KmeansModel = {
-    def train = trainOn(quantizedPoints(s, dir), K, Iters)
-    if (s.conf.getOption("spark.graft.fixtureCache").contains("true"))
-      modelCache.getOrElseUpdate((s, s"$dir|$K|$Iters"), train)
-    else train
-  }
+  private[graft] def trainedModel(s: SparkSession, dir: String): KmeansModel =
+    trainOn(quantizedPoints(s, dir), K, Iters)
 
   /** The (cluster, d, c, size) centroid table of a trained model — the
     * ONE conversion both kmeans (the oracle-gated query) and kmeansOn

@@ -86,18 +86,8 @@ object PqOps {
     }
   }
 
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), PqModel]
-
-  /** Trained model memo — the ClusterOps/Tables opt-in pattern: only
-    * Bench/Verify (one session, exits with the JVM) set
-    * spark.graft.fixtureCache; library sessions retrain per call. */
-  private[graft] def trainedPq(s: SparkSession, dir: String): PqModel = {
-    def train = trainPqOn(ClusterOps.quantizedPoints(s, dir))
-    if (s.conf.getOption("spark.graft.fixtureCache").contains("true"))
-      modelCache.getOrElseUpdate((s, s"$dir|$SubM|$PqK|$PqIters"), train)
-    else train
-  }
+  private[graft] def trainedPq(s: SparkSession, dir: String): PqModel =
+    trainPqOn(ClusterOps.quantizedPoints(s, dir))
 
   private[ops] def subSlice(m: Int): Column = slice(col("q"), m * SubDim + 1, SubDim)
 
@@ -387,20 +377,11 @@ object PqOps {
     * SubM·PqK·SubDim = 1024 rows of driver metadata after the
     * distributed Lloyd iterations ([[trainPqOn]]: one in-row assignment
     * job + one ≤1024-rows-per-partition combine per iteration).
-    * [[pqStats]] and [[simTopKPq]] consume the SAME memoized model
-    * ([[trainedPq]]), so in a fixtureCache session (Bench/Verify —
-    * disclosed in PERF.md) their timings measure the evaluate/serving
-    * scans, with this key carrying the training cost.
+    * [[pqStats]] and [[simTopKPq]] train the same model ([[trainedPq]])
+    * on every call, so their timings include this build.
     */
-  def pqTrain(s: SparkSession, dir: String): DataFrame = {
-    // ALWAYS runs the distributed build (never a memo read) — this key's
-    // registered meaning is the training cost — and REFRESHES the memo so
-    // the consumer legs in a fixtureCache session read this build
-    val model = trainPqOn(ClusterOps.quantizedPoints(s, dir))
-    if (s.conf.getOption("spark.graft.fixtureCache").contains("true"))
-      modelCache((s, s"$dir|$SubM|$PqK|$PqIters")) = model
-    pqModelDf(s, model)
-  }
+  def pqTrain(s: SparkSession, dir: String): DataFrame =
+    pqModelDf(s, trainedPq(s, dir))
 
   /** The trained codebooks as (sub, cluster, d, c_val) rows —
     * SubM·PqK·SubDim driver-metadata rows, the q_pq_train result shape

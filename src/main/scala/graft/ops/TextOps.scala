@@ -318,15 +318,8 @@ object TextOps {
     * would corrupt the encoding identically on both sides, which the
     * cross-engine hash could never catch.
     */
-  def bpeTrain(s: SparkSession, dir: String): DataFrame = {
-    // ALWAYS trains (this key's registered meaning is the training cost —
-    // the PqOps.pqTrain convention) and refreshes the memo so the apply
-    // leg in a fixtureCache session consumes this build
-    val merges = bpeTrainedMerges(Tables.documents(s, dir), BpeMerges)
-    if (s.conf.getOption("spark.graft.fixtureCache").contains("true"))
-      mergeCache((s, s"$dir|$BpeMerges")) = merges
-    mergesDf(s, merges)
-  }
+  def bpeTrain(s: SparkSession, dir: String): DataFrame =
+    mergesDf(s, trainedMerges(s, dir))
 
   private[graft] def bpeTrainOn(documents: DataFrame, k: Int): DataFrame =
     mergesDf(documents.sparkSession, bpeTrainedMerges(documents, k))
@@ -338,20 +331,9 @@ object TextOps {
       .resultOrder(col("it"))
   }
 
-  // Trained-merge memo, OPT-IN via spark.graft.fixtureCache — the
-  // ClusterOps/PqOps model-cache pattern: Bench/Verify own one session and
-  // run both q_bpe_train and q_bpe_apply, which share this training; a
-  // library session retrains per call. The value is ≤ K tuples of strings.
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Int, String, String, String, Long)]]
-
   private[graft] def trainedMerges(
-      s: SparkSession, dir: String): Seq[(Int, String, String, String, Long)] = {
-    def train = bpeTrainedMerges(Tables.documents(s, dir), BpeMerges)
-    if (s.conf.getOption("spark.graft.fixtureCache").contains("true"))
-      mergeCache.getOrElseUpdate((s, s"$dir|$BpeMerges"), train)
-    else train
-  }
+      s: SparkSession, dir: String): Seq[(Int, String, String, String, Long)] =
+    bpeTrainedMerges(Tables.documents(s, dir), BpeMerges)
 
   /** The Sennrich training loop itself, returning the merge table as
     * driver metadata (≤ k rows — the merge decision IS metadata, see the
@@ -423,9 +405,8 @@ object TextOps {
     * as literals — the [[ClusterOps]] trained-model idiom — so apply is a
     * pure in-row projection chain: one corpus scan, ZERO data-dependent
     * shuffles at any scale (fanOut/resultOrder are the size-gated fixture
-    * aids). The training cost is carried by the q_bpe_train key; in a
-    * fixtureCache session apply reuses the memoized merges (disclosed in
-    * PERF.md, the PqOps convention).
+    * aids). Apply retrains the merges on every call ([[trainedMerges]]),
+    * so its timing includes the q_bpe_train cost.
     */
   def bpeApply(s: SparkSession, dir: String): DataFrame = {
     val merges = trainedMerges(s, dir)

@@ -96,15 +96,10 @@ object MaterializedViews {
       }
     } catch { case _: Throwable => () } // best-effort housekeeping
 
-  /** The MV as a DataFrame. A partitioned-parquet read pays partition
-    * discovery + schema inference on every `spark.read.parquet` call —
-    * pure per-read floor once the MV exists. Memoized through
-    * Tables.memoizedDf (the one opt-in cache: same flag, keying, and
-    * session-pinning leak reasoning); a dashboard deployment gets the
-    * same effect from a registered table in the catalog.
+  /** The MV as a DataFrame. Each call pays partition discovery and schema
+    * inference; a dashboard deployment avoids that with a registered
+    * catalog table whose metastore prunes partitions without listing.
     */
-  def minuteMvDf(spark: SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
-    val out = minuteMvDir(spark, sfDir)
-    graft.Tables.memoizedDf(spark, out)(spark.read.parquet(out))
-  }
+  def minuteMvDf(spark: SparkSession, sfDir: String): org.apache.spark.sql.DataFrame =
+    spark.read.parquet(minuteMvDir(spark, sfDir))
 }

@@ -5,25 +5,17 @@
 # windows on identical code). Usage:
 #   paired_bench.sh <beforeClasses> <afterClasses> <keys> <reps> <rounds> <sfDir> <outPrefix>
 # Emits <outPrefix>_{before,after}_<round>.json (the full bench metric line).
+# Each run goes through run_main.sh (JVM flags) with the tree's classes dir.
 # Exits non-zero at the first round whose java run fails or does not leave
 # exactly one bench_*.json, so a partial round set is never paired.
 set -uo pipefail
 BEFORE="$1"; AFTER="$2"; KEYS="$3"; REPS="${4:-4}"; ROUNDS="${5:-2}"
 SF="${6:-/root/testdata/sf0.1}"; OUT="${7:-/tmp/paired}"
-OPENS=(java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-       java.util java.util.concurrent java.util.concurrent.atomic)
-FLAGS=()
-for p in "${OPENS[@]}"; do FLAGS+=(--add-opens "java.base/$p=ALL-UNNAMED"); done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  FLAGS+=(--add-opens "java.base/$p=ALL-UNNAMED")
-done
+HERE="$(cd "$(dirname "$0")" && pwd)"
 run() { # <classes> <tag> <round>
   local d; d=$(mktemp -d)
   SPARK_GRAFT_ONLY="$KEYS" SPARK_GRAFT_REPS="$REPS" SPARK_GRAFT_SF_DIR="$SF" \
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" SPARK_GRAFT_BENCH_DIR="$d" \
-  java "${FLAGS[@]}" -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$1:/opt/spark/jars/*" graft.Bench > /dev/null 2>&1
+  SPARK_GRAFT_BENCH_DIR="$d" "$HERE/run_main.sh" -cp "$1" graft.Bench > /dev/null 2>&1
   local rc=$?
   local outs=("$d"/bench_*.json)
   if [ "$rc" -ne 0 ] || [ "${#outs[@]}" -ne 1 ] || [ ! -f "${outs[0]}" ]; then
